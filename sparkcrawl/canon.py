@@ -138,3 +138,10 @@ def canonicalize_series(urls: pd.Series) -> pd.Series:
 
 def host_series(urls: pd.Series) -> pd.Series:
     return urls.map(url_host)
+
+
+def canonicalize_frame(urls: pd.Series) -> pd.DataFrame:
+    """(url_canon, host) in one pass: the host is read off the canonical
+    form, so one Arrow UDF yields both columns."""
+    canon = canonicalize_series(urls)
+    return pd.DataFrame({"url_canon": canon, "host": host_series(canon)})

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import bloom as bloom_mod
-from .canon import canonicalize_series, host_series
+from .canon import canonicalize_frame, canonicalize_series
 from .extract import husk_frame
 from .robots import allowed_series
 from .schemas import EXTRACTED, FRONTIER, SEEDS
@@ -29,7 +29,10 @@ PRIORITY_DEPTH_W = 10.0
 PRIORITY_SEED_W = 1.0
 
 canonicalize_udf = F.pandas_udf(canonicalize_series, T.StringType())
-host_udf = F.pandas_udf(host_series, T.StringType())
+canonicalize_frame_udf = F.pandas_udf(canonicalize_frame, T.StructType([
+    T.StructField("url_canon", T.StringType()),
+    T.StructField("host", T.StringType()),
+]))
 robots_allowed_udf = F.pandas_udf(allowed_series, T.BooleanType())
 
 _HUSK_SCHEMA = T.StructType([
@@ -44,13 +47,17 @@ def priority_expr(depth: Column, seed_distance: Column) -> Column:
 
 
 def with_canon(df: DataFrame, n_buckets: int, url_col: str = "url") -> DataFrame:
-    """A2/A3: canon (Arrow UDF) → host → xxhash64 (JVM-side) → host_bucket."""
+    """A2/A3: canon + host (ONE Arrow UDF — a host UDF over the canon
+    UDF's column would chain a second canonicalizer run) → xxhash64
+    (JVM-side) → host_bucket."""
     return (
-        df.withColumn("url_canon", canonicalize_udf(F.col(url_col)))
+        df.withColumn("_canon", canonicalize_frame_udf(F.col(url_col)))
+        .withColumn("url_canon", F.col("_canon.url_canon"))
         .withColumn("url_hash", F.xxhash64("url_canon"))
-        .withColumn("host", host_udf("url_canon"))
+        .withColumn("host", F.col("_canon.host"))
         .withColumn("host_bucket",
                     F.pmod(F.xxhash64("host"), F.lit(n_buckets)).cast("int"))
+        .drop("_canon")
     )
 
 
@@ -213,13 +220,21 @@ def discover_links(extracted: DataFrame, round_no: int, n_buckets: int) -> DataF
 def probe_seen(candidates: DataFrame, frontier: DataFrame,
                seen_df: Optional[DataFrame], spark: SparkSession,
                contains_fn=None) -> DataFrame:
-    """A5 dedupe, exact-with-Bloom-fast-path (SURVEY §2.A A5):
+    """A5 dedupe, exact with a Bloom fast path (SURVEY §2.A A5): the
+    filter flags each candidate ``maybe_seen``, then ONE left_anti join
+    against the authoritative frontier drops the candidates that are
+    maybe-seen AND present there.
 
-    * Bloom NEGATIVE ⇒ definitely unseen ⇒ admitted with NO join.
-    * Bloom POSITIVE ⇒ maybe seen ⇒ exact left_anti join against the
-      authoritative frontier (false positives survive; true duplicates
-      drop).  At 10^10 scale the anti-join therefore touches only the
-      tiny maybe-seen slice instead of every discovered link.
+    * Bloom NEGATIVE ⇒ definitely unseen ⇒ the join condition
+      ``url_hash = frontier.url_hash AND maybe_seen`` can never hold, so
+      the row always survives.
+    * Bloom POSITIVE ⇒ maybe seen ⇒ survives only without a frontier
+      match (false positives survive; true duplicates drop).
+
+    One join keeps the Python cogroup evaluated once: a union of
+    filtered ``fresh`` and ``verified`` branches over it would run it once
+    per branch.  The price is that filter-negative rows cross the join
+    too (shuffled by url_hash unless the frontier side is broadcast).
 
     ``seen_df`` is the per-bucket filter table (SEEN_SET schema:
     partition_id, bloom, n_items, …) or None for the pure anti-join
@@ -271,10 +286,11 @@ def probe_seen(candidates: DataFrame, frontier: DataFrame,
     flagged = (candidates.groupBy("host_bucket")
                .cogroup(blobs.groupBy("host_bucket"))
                .applyInPandas(lambda key, c, b: probe(c, b), schema))
-    fresh = flagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = flagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    verified = maybe.join(frontier.select("url_hash"), "url_hash", "left_anti")
-    return fresh.unionByName(verified)
+    seen_keys = frontier.select(F.col("url_hash").alias("_seen_hash"))
+    return (flagged.join(seen_keys,
+                         (flagged["url_hash"] == seen_keys["_seen_hash"])
+                         & flagged["maybe_seen"], "left_anti")
+            .drop("maybe_seen"))
 
 
 def to_extracted(fetched: DataFrame, round_no: int) -> DataFrame:

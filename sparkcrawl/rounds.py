@@ -21,7 +21,7 @@ import tempfile
 import time
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
-from functools import reduce
+from functools import cached_property, reduce
 from typing import Dict, List, Optional
 
 import pandas as pd
@@ -39,11 +39,12 @@ from .storage import IcebergishTable
 # rounds — adaptive re-planning latency dominates small shuffles), every
 # round-internal shuffle gets the session's static partition count, sized
 # for corpus-scale scans.  Rounds know their own state size (pending
-# rows), so each round derives its count from that — floored at n_buckets
-# (keeps the per-bucket python stages fully parallel) and never above the
-# session's configured value (a 10^10-URL pending keeps full cluster
-# parallelism; only near-empty rounds stop paying ~64 empty tasks per
-# stage).
+# rows), so each round derives its count from that — floored at one task
+# per core (defaultParallelism) and never above the session's configured
+# value (a 10^10-URL pending keeps full cluster parallelism).  Most round
+# stages are Python stages (seen-probe and filter cogroups, robots,
+# canon), and a Python-worker task costs ~0.25-0.3 s before its first
+# row: tasks beyond the core count only queue that cost.
 ROWS_PER_SHUFFLE_TASK = 25_000
 
 
@@ -191,8 +192,9 @@ class CrawlEngine:
             obs = Observation()
             # pending seed-out and seen-filter build both consume the
             # just-written frontier parquet and target DISTINCT tables —
-            # run them concurrently (the run_round wave pattern; serial
-            # they were ~2.2 s, overlapped ~1.4 s per init)
+            # run them concurrently (the run_round wave pattern; one warm
+            # A/B at 120k pages + 30k seeds read serial 2.31/3.09 s vs
+            # overlapped 2.38/1.92 s per init — a small, noisy win)
             with ThreadPoolExecutor(max_workers=2) as pool:
                 waved = [
                     pool.submit(
@@ -325,20 +327,22 @@ class CrawlEngine:
     @contextmanager
     def _round_shuffle_scope(self, workload_rows: int):
         """Scoped, state-sized spark.sql.shuffle.partitions for one
-        round's jobs (see ROWS_PER_SHUFFLE_TASK).  Restores the session
-        value on exit — queries running after the engine see their own
+        round's jobs (see ROWS_PER_SHUFFLE_TASK): one task per core
+        until the state needs more, never above the session value.
+        Yields the partition count.  Restores the session value on
+        exit — queries running after the engine see their own
         configuration."""
         conf = self.spark.conf
         saved = conf.get("spark.sql.shuffle.partitions")
         # never ABOVE the session value (a local[2] leg configured at 16
-        # must not be amplified to a large bucket count), never below
-        # n_buckets unless the session itself is configured lower
+        # must not be amplified), never below one task per core unless
+        # the session itself is configured lower
         parts = min(int(saved),
-                    max(self.n_buckets,
+                    max(self.spark.sparkContext.defaultParallelism,
                         int(workload_rows) // ROWS_PER_SHUFFLE_TASK + 1))
         conf.set("spark.sql.shuffle.partitions", str(parts))
         try:
-            yield
+            yield parts
         finally:
             conf.set("spark.sql.shuffle.partitions", saved)
 
@@ -369,17 +373,34 @@ class CrawlEngine:
         finally:
             conf.set("spark.sql.files.maxPartitionBytes", saved)
 
-    def run_round(self) -> dict:
-        with self._round_shuffle_scope(self._pending_count):
-            return self._run_round_inner()
+    @cached_property
+    def _robots_rules(self) -> DataFrame:
+        """The robots table, materialized once per engine on first use.
+        A driver-built robots frame (createDataFrame of a list) is a
+        pickled Python RDD, so each round's broadcast of it would re-run
+        a Python pass.  A LAZY local checkpoint runs that pass inside the
+        first round's broadcast job and later rounds read the stored
+        blocks; an eager one would add a job to engine construction."""
+        return self.robots.localCheckpoint(eager=False)
 
-    def _run_round_inner(self) -> dict:
+    def run_round(self) -> dict:
+        with self._round_shuffle_scope(self._pending_count) as parts:
+            return self._run_round_inner(parts)
+
+    def _run_round_inner(self, parts: int) -> dict:
         """One micro-batch (SURVEY §3.2 DAG).  Returns the round summary.
 
         Job discipline (the per-round overhead + memory budget):
 
-        * LIGHT DataFrames (pending/selected/candidates — urls + metadata,
-          no payloads) are persisted and shared by their consumers.
+        * LIGHT DataFrames (checked/selected/new — urls + metadata, no
+          payloads) that feed several consumers are persisted and shared.
+        * Every Python pass runs ONCE per round on ``parts`` tasks (one
+          per core until the state needs more): a Python-worker task
+          costs ~0.25-0.3 s before its first row, so task counts, not
+          UDF bodies, set most of a small round's executor time.  Hence
+          the coalesced pending scan, the single seen-probe join (whose
+          one consumer makes persisting the candidates pointless) and
+          the once-per-engine robots frame.
         * The HEAVY path (html → husk UDF → text/links) is materialized
           exactly ONCE, by the extracted-table write; everything that
           needs its results (fetchlog status, link discovery, metrics)
@@ -396,8 +417,10 @@ class CrawlEngine:
             return time.time()
 
         tp = time.time()
-        pending = self.pending.read(spark)
-        checked = apply_robots(pending, self.robots).persist()
+        # the scan would run the robots UDF on one task per file split
+        # (several per bucket); coalesce is narrow — no shuffle
+        pending = self.pending.read(spark).coalesce(parts)
+        checked = apply_robots(pending, self._robots_rules).persist()
         denied = checked.filter(~F.col("robots_ok")).drop("robots_ok")
         allowed = checked.filter(F.col("robots_ok")).drop("robots_ok")
 
@@ -414,7 +437,8 @@ class CrawlEngine:
             # per-host robots Crawl-delay rides along for the pool's
             # per-host pacing (max of it and courtesy_delay_s)
             fetched = fetch_and_husk_http(
-                with_robots_delay(selected, self.robots), **self.http_opts)
+                with_robots_delay(selected, self._robots_rules),
+                **self.http_opts)
         else:
             fetched = fetch_and_husk(selected, self.pages,
                                      broadcast_selected=self.fetch_broadcast)
@@ -461,7 +485,7 @@ class CrawlEngine:
         )
         # discover → dedupe (bloom fast-path + exact anti-join)
         frontier_all = self.frontier.read(spark)
-        cands = discover_links(ext_ok, r, self.n_buckets).persist()
+        cands = discover_links(ext_ok, r, self.n_buckets)
         # per-bucket filter blobs stay in the seen table; candidates meet
         # them bucket-co-partitioned inside probe_seen (no driver state,
         # no full-blob broadcast)
@@ -543,7 +567,7 @@ class CrawlEngine:
                 [tuple(row[f.name] for f in METRICS.fields)
                  for row in stats_rows], METRICS), r)
         tp = mark("metrics", tp)
-        for df in (checked, selected, cands, new):
+        for df in (checked, selected, new):
             df.unpersist()
 
         if self.compact_every and r % self.compact_every == 0:

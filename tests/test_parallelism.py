@@ -4,13 +4,18 @@ content.  Each parallelism level runs in its own subprocess (own JVM) —
 same-process SparkSessions can't change master."""
 
 import json
+import os
 import subprocess
 import sys
 
+# the checkout under test: the subprocess (and its Python workers) must
+# import THIS tree's sparkcrawl, wherever it lives
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 SCRIPT = r"""
 import sys, json, shutil, os
-sys.path.insert(0, "/root/repo")
-master, wd = sys.argv[1], sys.argv[2]
+root, master, wd = sys.argv[1], sys.argv[2], sys.argv[3]
+sys.path.insert(0, root)
 from tests.conftest import make_spark
 from sparkcrawl import corpus
 from sparkcrawl.rounds import CrawlEngine
@@ -36,9 +41,11 @@ spark.stop()
 
 
 def _run(master, wd):
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p))
     out = subprocess.run(
-        [sys.executable, "-c", SCRIPT, master, str(wd)],
-        capture_output=True, text=True, timeout=900)
+        [sys.executable, "-c", SCRIPT, ROOT, master, str(wd)],
+        capture_output=True, text=True, timeout=900, env=env)
     assert out.returncode == 0, out.stderr[-3000:]
     return json.loads(out.stdout.strip().splitlines()[-1])
 

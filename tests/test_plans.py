@@ -104,6 +104,29 @@ def test_probe_seen_is_cogrouped_not_broadcast(spark):
     assert "Broadcast" not in plan.split("LeftAnti")[0]
 
 
+def test_probe_seen_evaluates_cogroup_once(spark):
+    """The filter-flagged candidates feed ONE anti-join: a union of a
+    fresh and a verified branch plans (and runs) the Python cogroup once
+    per branch."""
+    from sparkcrawl.frontier import probe_seen
+    from sparkcrawl.schemas import SEEN_SET
+    seeds = seeds_to_frontier(spark, [corpus.page_url(i) for i in range(20)], 8)
+    seen = spark.createDataFrame([], SEEN_SET)
+    plan = plan_of(probe_seen(seeds, seeds, seen, spark))
+    assert plan.count("FlatMapCoGroupsInPandas") == 1, plan
+
+
+def test_with_canon_canonicalizes_once(spark):
+    """url_canon and host come from ONE Arrow UDF call per URL — a host
+    UDF over the canon column chained a second canonicalizer run."""
+    from sparkcrawl.frontier import with_canon
+    df = spark.createDataFrame([("http://Example.COM/a?b=1#c",)], "url string")
+    plan = plan_of(with_canon(df, 8))
+    evals = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+    assert len(evals) == 1, plan
+    assert evals[0].count("canonicalize") == 1, evals[0]
+
+
 def test_asof_is_union_window_not_expanding_join(spark):
     """join_asof must not contain a join at all — the union-and-window
     merge replaces the range join whose intermediate is
